@@ -896,6 +896,63 @@ def test_search_arrow_serving_format(spark, tmp_path):
     d.close()
 
 
+def test_driver_ordered_reads_match_spark_order(spark, tmp_path):
+    """search/search_arrow/all sort on the driver; their rows must come
+    back in search_df's Spark order (time, then insertion order; or
+    insertion order alone) on a store whose equal timestamps are split
+    across insert batches and files, and whose file order is not time
+    order."""
+    import pyarrow as pa
+
+    d = TinyFluxSpark(str(tmp_path / "order"), spark=spark)
+    batches = [[30, 2, 2, 7], [2, 26, 1, 30], [7, 2, 0, 26], [1, 30, 2, 2]]
+    hours = [h for b in batches for h in b]
+    i = 0
+    for b in batches:
+        pts = []
+        for h in b:
+            pts.append(Point(time=T0 + timedelta(hours=h),
+                             measurement="ab"[i % 2],
+                             tags={"n": str(i)}, fields={"i": float(i)}))
+            i += 1
+        d.insert_multiple(pts)
+    assert d.storage.parquet_file_count() > len(batches)
+
+    def spark_ids(df):
+        return [r["fields"]["i"] for r in df.collect()]
+
+    def point_ids(points):
+        return [p.fields["i"] for p in points]
+
+    def arrow_ids(rbs):
+        tbl = pa.Table.from_batches(rbs)
+        return [dict(f)["i"] for f in tbl.column("fields").to_pylist()]
+
+    q = FieldQuery().i >= 1
+    everything = TimeQuery().noop()
+    a = d.measurement("a")
+    for srt in (True, False):
+        want = spark_ids(d.search_df(q, sorted=srt))
+        order = sorted(range(1, i), key=lambda j: (hours[j], j) if srt else j)
+        assert want == [float(j) for j in order]
+        got = d.search(q, sorted=srt)
+        assert point_ids(got) == want
+        assert [p.time for p in got] == [
+            T0 + timedelta(hours=hours[j]) for j in order]
+        assert arrow_ids(d.search_arrow(q, sorted=srt)) == want
+        assert point_ids(d.all(sorted=srt)) == spark_ids(
+            d.search_df(everything, sorted=srt))
+        assert point_ids(a.search(q, sorted=srt)) == spark_ids(
+            a.search_df(q, sorted=srt))
+        assert point_ids(a.all(sorted=srt)) == spark_ids(
+            a.search_df(everything, sorted=srt))
+    none = FieldQuery().i > 1000
+    assert d.search(none) == [] and d.search(none, sorted=False) == []
+    assert d.search_arrow(none) == []
+    assert a.search(none) == [] and d.measurement("zz").all() == []
+    d.close()
+
+
 def test_legacy_store_rejects_new_index_config(spark, tmp_path):
     """A pre-index-era manifest means 'no index columns': opening it
     WITH an index request must raise (the columns don't exist in the

@@ -303,6 +303,34 @@ def test_interval_join_broadcast_matches_shuffle_path(spark):
     assert bcast == shuffled
 
 
+def test_row_hash_routing_skips_map_columns(spark, monkeypatch):
+    """The broadcast path widens an under-partitioned interval side with
+    a row hash, and salted_join salts by one; Spark refuses to hash a
+    map, so both must hash around a map column, not fail on it."""
+    monkeypatch.delenv("TINYFLUX_SPARK_NO_SPREAD", raising=False)
+    p = spark.createDataFrame([(t,) for t in [0, 5, 9, 10, 11, 25, 40]], ["t"])
+    iv = spark.createDataFrame(
+        [(1, 3, 12, {"k": "a"}), (2, 10, 10, None), (3, 8, 41, {})],
+        "iv_id int, s int, e int, meta map<string,string>",
+    ).coalesce(1)
+
+    def pairs(broadcast):
+        return sorted(
+            (r["iv_id"], r["t"], tuple(sorted((r["meta"] or {}).items())))
+            for r in aggregates.interval_join(
+                p, iv, "t", "s", "e", bin_width=10,
+                broadcast_points=broadcast,
+            ).collect()
+        )
+
+    assert pairs(True) == pairs(False)
+    assert len(pairs(True)) == 10
+    right = spark.createDataFrame([(1, "x"), (3, "y")], ["iv_id", "name"])
+    salted = aggregates.salted_join(iv, right, ["iv_id"], n_salts=4)
+    assert sorted((r["iv_id"], r["name"]) for r in salted.collect()) == [
+        (1, "x"), (3, "y")]
+
+
 def test_shingle_fingerprint_identical_on_single_partition_input(spark):
     rows = [(i, f"some document text number {i} with shingles") for i in range(20)]
     one = spark.createDataFrame(rows, ["doc_id", "text"]).coalesce(1)

@@ -683,6 +683,42 @@ def test_collect_arrow_batches_fallback_matches_fast_path(spark, monkeypatch):
     assert t_fast.sort_by("id").to_pydict() == t_slow.sort_by("id").to_pydict()
 
 
+def test_driver_bound_reads_run_one_job(spark, tmp_path):
+    """Reads whose whole answer goes to Python filter in Spark and order
+    on the driver: one collect job. A Spark global sort there would add
+    a range-partition sampling job and a shuffle, and fail this guard."""
+    import itertools
+
+    d = TinyFluxSpark(str(tmp_path / "jobs"), spark=spark)
+    for batch in range(3):
+        d.insert_multiple(
+            Point(time=T0 + timedelta(hours=30 - 7 * batch - i),
+                  measurement="ab"[i % 2], tags={"city": "LA"},
+                  fields={"t": float(i)})
+            for i in range(6)
+        )
+    assert d.storage.parquet_file_count() > 3
+    sc = spark.sparkContext
+    groups = itertools.count()
+
+    def jobs(call) -> int:
+        group = f"driver-bound-read-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            call()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    q = FieldQuery().t >= 2
+    for srt in (True, False):
+        assert jobs(lambda: d.search_arrow(q, sorted=srt)) == 1
+        assert jobs(lambda: d.search(q, sorted=srt)) == 1
+        assert jobs(lambda: d.all(sorted=srt)) == 1
+    assert jobs(d.get_measurements) <= 2
+    d.close()
+
+
 def test_bnlj_allowlist_build_sides_are_one_row(spark):
     """Guard on the bnlj_ok allowlist above: every
     BroadcastNestedLoopJoin in an allowlisted query's EXECUTED plan at

@@ -8,12 +8,21 @@ context-manager protocol.
 
 Design notes (SURVEY.md §3-§4):
 
-* Each read op is one declarative DataFrame plan; Catalyst provides the
-  pruning the reference's in-memory Index performs (time-range via
-  parquet min/max stats, measurement via partition pruning, tags/fields
-  via pushed-down predicates on the scan). No index object exists, so
-  there is no invalidation/rebuild machinery to port
-  (reference index.py is replaced wholesale).
+* Each read op filters in one declarative DataFrame plan; Catalyst
+  provides the pruning the reference's in-memory Index performs
+  (time-range via parquet min/max stats, measurement via partition
+  pruning, tags/fields via pushed-down predicates on the scan). No
+  index object exists, so there is no invalidation/rebuild machinery
+  to port (reference index.py is replaced wholesale).
+* Calls that return their whole answer to Python (``search``,
+  ``search_arrow``, ``all``, ``select``, ``get_field_values``,
+  ``get_timestamps``, the key listings) order it on the driver: Spark
+  filters (and, for key listings, deduplicates), then an Arrow or
+  Python sort orders the collected rows by ``(time, _seq)``, ``_seq``
+  or the key. A Spark ``orderBy`` would add a range-sort sampling job
+  and a shuffle for rows bound for this one process anyway. The
+  DataFrame surface (``search_df``, ``select_df``), ``get`` and
+  iteration keep their Spark ordering.
 * Insertion-order contracts (``get`` = first by storage order, reference
   database.py:349-377; ``sorted=False``; ``get_timestamps``) ride on the
   durable ``_seq`` column stamped at ingest.
@@ -449,43 +458,65 @@ class TinyFluxSpark:
             df = df.where(query.compile(indexed=self._storage.index_cols))
         return df.drop(PDATE_COL, *self._storage.index_cols.values())
 
-    @staticmethod
-    def _collect_points(df: DataFrame) -> List[Point]:
-        """Materialize matches as Points through Arrow (``toPandas``)
-        rather than row pickling — large collects move as columnar
-        batches, 5-10× cheaper on the driver. Timestamps arrive tz-naive
-        in the session's UTC; re-attach the zone like ``Point.from_row``.
-        """
-        import warnings
+    def _collect_table(
+        self, query: Optional[Query], measurement: Optional[str], sorted: bool
+    ):
+        """Matches as one ``pyarrow.Table``, filtered in Spark and
+        ordered on the driver.
 
-        pdf = df.select("time", "measurement", "tags", "fields").toPandas()
-        if not len(pdf):
-            return []
-        with warnings.catch_warnings():
-            # pandas 2.x deprecation: future versions return a Series
-            # instead of an ndarray — both iterate identically here.
-            warnings.simplefilter("ignore", FutureWarning)
-            times = pdf["time"].dt.tz_localize(
-                timezone.utc
-            ).dt.to_pydatetime()
+        The unsorted ``_filtered`` frame, ``_seq`` included, comes back
+        through one Arrow collect (one Spark job). The driver then sorts
+        by (time, _seq), or by ``_seq`` alone for ``sorted=False``, and
+        drops ``_seq``. A Spark ``orderBy`` here would add a range-sort
+        sampling job and a shuffle to order rows that all land in this
+        process anyway. ``null_placement="at_start"`` matches Spark's
+        ``ASC NULLS FIRST``.
+        """
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        from . import schema
+
+        df = self._filtered(query, measurement)
+        batches = schema.collect_arrow_batches(df)
+        table = (
+            pa.Table.from_batches(batches) if batches
+            else to_arrow_schema(df.schema).empty_table()
+        )
+        keys = [("time", "ascending")] if sorted else []
+        return table.sort_by(
+            keys + [(SEQ_COL, "ascending")], null_placement="at_start"
+        ).drop_columns([SEQ_COL])
+
+    def _collect_points(
+        self, query: Optional[Query], measurement: Optional[str], sorted: bool
+    ) -> List[Point]:
+        """Matches as Points, built from ``_collect_table``'s columns.
+        Arrow hands back tz-aware timestamps and maps as (key, value)
+        pairs; Points carry ``timezone.utc`` and dicts, like
+        ``Point.from_row``."""
+        import pyarrow as pa
+
+        table = self._collect_table(query, measurement, sorted)
+        times = table.column("time").cast(pa.timestamp("us")).to_pylist()
         out: List[Point] = []
         for t, m, tg, fl in zip(
-            times, pdf["measurement"], pdf["tags"], pdf["fields"]
+            times,
+            table.column("measurement").to_pylist(),
+            table.column("tags").to_pylist(),
+            table.column("fields").to_pylist(),
         ):
             p = Point.__new__(Point)
-            p._time = t
+            p._time = None if t is None else t.replace(tzinfo=timezone.utc)
             p._measurement = m
-            # Arrow delivers MapType as real dicts; empty maps arrive
-            # as {} and only a NULL map needs the fallback.
-            p._tags = tg if tg is not None else {}
-            p._fields = fl if fl is not None else {}
+            # Only a NULL map needs the fallback; empty maps arrive as [].
+            p._tags = dict(tg) if tg is not None else {}
+            p._fields = dict(fl) if fl is not None else {}
             out.append(p)
         return out
 
     def all(self, sorted: bool = True, measurement: Optional[str] = None) -> List[Point]:
-        df = self._filtered(None, measurement)
-        df = df.orderBy("time", SEQ_COL) if sorted else df.orderBy(SEQ_COL)
-        return self._collect_points(df)
+        return self._collect_points(None, measurement, sorted)
 
     def search(
         self,
@@ -493,8 +524,10 @@ class TinyFluxSpark:
         measurement: Optional[str] = None,
         sorted: bool = True,
     ) -> List[Point]:
-        """All matching points (reference database.py:740-828)."""
-        return self._collect_points(self.search_df(query, measurement, sorted))
+        """All matching points (reference database.py:740-828), by
+        (time, insertion order), or insertion order for
+        ``sorted=False``. Spark filters; the driver orders."""
+        return self._collect_points(query, measurement, sorted)
 
     def search_df(
         self,
@@ -511,16 +544,13 @@ class TinyFluxSpark:
         measurement: Optional[str] = None,
         sorted: bool = True,
     ):
-        """Matching points as a list of Arrow record batches — the
-        low-latency serving format: columnar, zero row objects, and
-        skips the driver-side Table assembly ``toArrow()`` performs
-        (a measurable share of sub-50ms actions). Feed the batches to
-        ``pyarrow.Table.from_batches`` / pandas / DuckDB as needed."""
-        from .schema import collect_arrow_batches
-
-        return collect_arrow_batches(
-            self.search_df(query, measurement, sorted).drop(SEQ_COL)
-        )
+        """Matching points as a list of Arrow record batches, the
+        low-latency serving format: columnar, zero row objects, in
+        ``search``'s order. Spark filters in one job; the driver sorts
+        the collected table, since every row comes here anyway. Feed
+        the batches to ``pyarrow.Table.from_batches`` / pandas / DuckDB
+        as needed."""
+        return self._collect_table(query, measurement, sorted).to_batches()
 
     def get(self, query: Query, measurement: Optional[str] = None) -> Optional[Point]:
         """First match by insertion order — NOT min-time
@@ -541,20 +571,31 @@ class TinyFluxSpark:
         (reference database.py:209-251)."""
         return bool(self._filtered(query, measurement).limit(1).take(1))
 
-    def _select_cols(self, keys: Sequence[str]) -> List:
+    @staticmethod
+    def _rows_by_seq(df: DataFrame, *cols) -> List[tuple]:
+        """``cols`` of every row of ``df`` as tuples, in insertion
+        order. Spark filters and projects in one job; the driver sorts
+        on ``_seq`` rather than paying a Spark range sort."""
+        rows = df.select(SEQ_COL, *cols).collect()
+        rows.sort(key=lambda r: r[0])
+        return [r[1:] for r in rows]
+
+    @staticmethod
+    def _select_cols(keys: Sequence[str]) -> List:
         cols = []
         for k in keys:
             if k in ("time", "measurement"):
-                cols.append(F.col(k))
+                c = F.col(k)
             elif k.startswith("tags."):
-                cols.append(F.col("tags")[k[5:]])
+                c = F.col("tags")[k[5:]]
             elif k.startswith("fields."):
-                cols.append(F.col("fields")[k[7:]])
+                c = F.col("fields")[k[7:]]
             else:
                 raise ValueError(
                     "Select keys must be 'time', 'measurement', "
                     "'tags.<key>', or 'fields.<key>'."
                 )
+            cols.append(c.alias(k.replace(".", "_")))
         return cols
 
     def select(
@@ -567,12 +608,11 @@ class TinyFluxSpark:
         one key → scalars, several → tuples
         (reference database.py:830-974)."""
         single = isinstance(keys, str)
-        key_list = [keys] if single else list(keys)
-        df = self.select_df(key_list, query, measurement)
-        rows = df.collect()
-        if single:
-            return [r[0] for r in rows]
-        return [tuple(r) for r in rows]
+        rows = self._rows_by_seq(
+            self._filtered(query, measurement),
+            *self._select_cols([keys] if single else keys),
+        )
+        return [r[0] for r in rows] if single else rows
 
     def select_df(
         self,
@@ -580,57 +620,46 @@ class TinyFluxSpark:
         query: Query,
         measurement: Optional[str] = None,
     ) -> DataFrame:
-        df = self._filtered(query, measurement).orderBy(SEQ_COL)
-        aliased = [
-            c.alias(k.replace(".", "_")) for c, k in
-            zip(self._select_cols(keys), keys)
-        ]
-        return df.select(*aliased)
+        return (
+            self._filtered(query, measurement)
+            .orderBy(SEQ_COL)
+            .select(*self._select_cols(keys))
+        )
 
     # -- introspection --------------------------------------------------
+    # Distinct key lists are small: they are sorted in Python after the
+    # collect. Python's code-point order equals Spark's UTF-8 byte order.
     def get_measurements(self) -> List[str]:
-        rows = (
-            self._storage.read()
-            .select("measurement")
-            .distinct()
-            .orderBy("measurement")
-            .collect()
-        )
-        return [r[0] for r in rows]
+        rows = self._storage.read().select("measurement").distinct().collect()
+        return sorted(r[0] for r in rows)
 
     def get_field_keys(self, measurement: Optional[str] = None) -> List[str]:
         rows = (
             self._filtered(None, measurement)
             .select(F.explode(F.map_keys("fields")).alias("k"))
             .distinct()
-            .orderBy("k")
             .collect()
         )
-        return [r[0] for r in rows]
+        return sorted(r[0] for r in rows)
 
     def get_field_values(
         self, field_key: str, measurement: Optional[str] = None
     ) -> List[Optional[float]]:
         """Values in insertion order; rows lacking the key are skipped
         (reference database.py:421-457)."""
-        rows = (
-            self._filtered(None, measurement)
-            .where(F.map_contains_key(F.col("fields"), field_key))
-            .orderBy(SEQ_COL)
-            .select(F.col("fields")[field_key].alias("v"))
-            .collect()
+        df = self._filtered(None, measurement).where(
+            F.map_contains_key(F.col("fields"), field_key)
         )
-        return [r[0] for r in rows]
+        return [r[0] for r in self._rows_by_seq(df, F.col("fields")[field_key])]
 
     def get_tag_keys(self, measurement: Optional[str] = None) -> List[str]:
         rows = (
             self._filtered(None, measurement)
             .select(F.explode(F.map_keys("tags")).alias("k"))
             .distinct()
-            .orderBy("k")
             .collect()
         )
-        return [r[0] for r in rows]
+        return sorted(r[0] for r in rows)
 
     def get_tag_values(
         self,
@@ -659,12 +688,7 @@ class TinyFluxSpark:
         return dict(sorted(out.items()))
 
     def get_timestamps(self, measurement: Optional[str] = None) -> List[datetime]:
-        rows = (
-            self._filtered(None, measurement)
-            .orderBy(SEQ_COL)
-            .select("time")
-            .collect()
-        )
+        rows = self._rows_by_seq(self._filtered(None, measurement), "time")
         return [
             r[0].replace(tzinfo=timezone.utc) if r[0].tzinfo is None else r[0]
             for r in rows

@@ -24,6 +24,7 @@ from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def decimal_sum(col, precision: int = 18, scale: int = 2) -> Column:
@@ -663,6 +664,24 @@ def percentile_summary(
     )
 
 
+def _has_map(dt: T.DataType) -> bool:
+    if isinstance(dt, T.MapType):
+        return True
+    if isinstance(dt, T.ArrayType):
+        return _has_map(dt.elementType)
+    if isinstance(dt, T.StructType):
+        return any(_has_map(f.dataType) for f in dt.fields)
+    return False
+
+
+def _row_hash(df: DataFrame) -> Column:
+    """xxhash64 of a row, for routing only. Columns holding a map are
+    left out: Spark refuses to hash maps (``HASH_MAP_TYPE``)."""
+    return F.xxhash64(*[
+        F.col(f.name) for f in df.schema.fields if not _has_map(f.dataType)
+    ])
+
+
 def interval_join(
     points: DataFrame,
     intervals: DataFrame,
@@ -735,9 +754,7 @@ def interval_join(
         # immaterial to this join.
         from ._spread import spread_scan
 
-        iv_src = spread_scan(
-            iv_src, F.xxhash64(*[F.col(c) for c in iv_src.columns])
-        )
+        iv_src = spread_scan(iv_src, _row_hash(iv_src))
     iv = iv_src.withColumn(
         "_bin",
         F.explode(
@@ -798,9 +815,7 @@ def salted_join(
             "column"
         )
     keys = list(on)
-    lsalt = F.pmod(
-        F.xxhash64(*[F.col(c) for c in left.columns]), F.lit(n_salts)
-    ).cast("int")
+    lsalt = F.pmod(_row_hash(left), F.lit(n_salts)).cast("int")
     l_df = left.withColumn("_salt", lsalt)
     # Widen an under-partitioned big side before the join's map work
     # (no-op when the input already has >= cores partitions, i.e. the
