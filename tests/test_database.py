@@ -1040,3 +1040,156 @@ def test_late_append_preserved_across_rewrite(spark, tmp_path):
     vals = sorted(p.fields["v"] for p in d.all())
     assert vals == [2.0, 50.0, 99.0]
     d.close()
+
+
+def test_empty_measurement_round_trips(spark, tmp_path):
+    """A "" measurement lives in Spark's default partition directory and
+    reads back as "", not NULL, through every call that names it."""
+    import os
+
+    d = TinyFluxSpark(str(tmp_path / "empty_m"), spark=spark)
+    d.insert_multiple([
+        Point(time=T0 + timedelta(hours=h), measurement=m,
+              fields={"v": float(h)})
+        for h, m in enumerate(["", "x", "", "x", ""])
+    ])
+    st = d.storage
+    assert os.path.isdir(
+        os.path.join(st.data_dir, "measurement=__HIVE_DEFAULT_PARTITION__"))
+    assert d.get_measurements() == ["", "x"]
+    got = d.search(MeasurementQuery() == "")
+    assert [(p.measurement, p.fields["v"]) for p in got] == [
+        ("", 0.0), ("", 2.0), ("", 4.0)]
+    assert [p.measurement for p in d.all()] == ["", "x", "", "x", ""]
+    assert d.remove(FieldQuery().v == 2.0, measurement="") == 1
+    d.insert_multiple([Point(time=T0, measurement="", fields={"v": 9.0})])
+    assert st.parquet_file_count("") == 2
+    assert d.compact("") == 1
+    assert st.parquet_file_count("") == 1
+    assert sorted(p.fields["v"] for p in d.search(
+        MeasurementQuery() == "")) == [0.0, 4.0, 9.0]
+    assert d.drop_measurement("") == 3
+    assert d.get_measurements() == ["x"] and len(d) == 2
+    d.close()
+
+
+# One row per case the two writers must encode alike:
+# (measurement, time, tags, fields).
+_WRITER_CASES = [
+    ("m", datetime(2020, 1, 1, 23, 59, 59, 999999, tzinfo=timezone.utc),
+     {"sensor": "s1", "city": "LA"}, {"v": 1.0, "w": 2.5}),   # plain
+    ("m", datetime(2020, 1, 2, tzinfo=timezone.utc),
+     {"sensor": "s1", "city": None}, {"v": None, "w": 3.0}),  # None values
+    ("m", datetime(2020, 1, 2, tzinfo=timezone.utc),
+     {}, {}),                                                 # empty maps
+    ("a:b/c%", datetime(2020, 1, 1, 23, 59, 59, 999999, tzinfo=timezone.utc),
+     {"sensor": "s2"}, {"v": 7}),                             # escaped name
+    ("", datetime(2020, 1, 2, tzinfo=timezone.utc),
+     {"city": "SF"}, {"w": -1.0}),                            # "" measurement
+    ("", datetime(2020, 1, 1, 23, 59, 59, 999999, tzinfo=timezone.utc),
+     {"sensor": None}, {"v": 0.0}),                           # unindexed None
+]
+
+
+def test_driver_writer_matches_spark_writer(spark, tmp_path):
+    """insert_multiple (parquet written on the driver) and
+    insert_dataframe (parquet written by Spark) of the same Points give
+    the same answers, before and after a compact over mixed files."""
+    import os
+
+    from tinyflux_spark.schema import points_to_df
+
+    pts = [Point(time=t, measurement=m, tags=tg, fields=fl)
+           for m, t, tg, fl in _WRITER_CASES]
+    kw = dict(spark=spark, index_tags=["sensor"], index_fields=["v"])
+    by_spark = TinyFluxSpark(str(tmp_path / "spark_w"), **kw)
+    by_driver = TinyFluxSpark(str(tmp_path / "driver_w"), **kw)
+    by_spark.insert_dataframe(points_to_df(spark, pts))
+    by_driver.insert_multiple(pts)
+
+    # one file per (measurement, pdate) of the batch
+    groups = {(m, t.date()) for m, t, _, _ in _WRITER_CASES}
+    assert by_driver.storage.parquet_file_count() == len(groups) == 5
+    assert not [n for n in os.listdir(by_driver.storage.path)
+                if n.startswith("_append_")]
+
+    def arrow_rows(batches):
+        return [
+            (r["time"], r["measurement"], dict(r["tags"]), dict(r["fields"]))
+            for b in batches for r in b.to_pylist()
+        ]
+
+    queries = [
+        TimeQuery().noop(),
+        TagQuery().sensor == "s1",                 # indexed tag
+        TagQuery().city == "LA",                   # map tag
+        FieldQuery().v >= 1,                       # indexed field
+        MeasurementQuery() == "",
+        (TimeQuery() >= datetime(2020, 1, 2, tzinfo=timezone.utc))
+        & (FieldQuery().w < 3.5),                  # pdate + map field
+    ]
+
+    def answers(d):
+        out = [
+            d.get_measurements(), d.get_tag_values(),
+            d.search(queries[0], sorted=False),
+            d.select(["time", "measurement", "tags.sensor", "fields.v"],
+                     queries[0]),
+            d.get(queries[1]), d.get(queries[4]),
+            d.count(queries[1]), d.count(queries[3]),
+        ]
+        for q in queries:
+            out += [d.search(q), arrow_rows(d.search_arrow(q))]
+        return out
+
+    assert answers(by_driver) == answers(by_spark)
+    assert by_driver.get_measurements() == ["", "a:b/c%", "m"]
+
+    # Append each store's second batch through the other writer, so both
+    # hold files of both kinds, then compact.
+    more = [Point(time=datetime(2020, 1, 2, 1, tzinfo=timezone.utc),
+                  measurement="m", tags={"sensor": "s1"},
+                  fields={"v": 5.0})]
+    by_spark.insert_multiple(more)
+    by_driver.insert_dataframe(points_to_df(spark, more))
+    for d in (by_spark, by_driver):
+        d.compact()
+        assert d.storage.parquet_file_count() == 5
+    assert answers(by_driver) == answers(by_spark)
+    by_spark.close()
+    by_driver.close()
+
+
+def test_failed_flush_leaves_store_unchanged(spark, tmp_path, monkeypatch):
+    """A write that fails part-way through a multi-file batch publishes
+    nothing and leaves no stage directory; the next insert works."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    d = TinyFluxSpark(str(tmp_path / "crash"), spark=spark)
+    d.insert_multiple(mk_points()[:4])
+    before = d.all()
+    real_write, calls = pq.write_table, []
+
+    def failing_write(*args, **kwargs):
+        calls.append(1)
+        if len(calls) == 2:
+            raise OSError("disk full")
+        return real_write(*args, **kwargs)
+
+    monkeypatch.setattr(pq, "write_table", failing_write)
+    with pytest.raises(OSError, match="disk full"):
+        d.insert_multiple([
+            Point(time=T0, measurement="weather", fields={"temp": 1.0}),
+            Point(time=T0, measurement="cpu", fields={"temp": 2.0}),
+        ])
+    assert len(calls) == 2
+    monkeypatch.undo()
+    assert d.all() == before
+    assert not [n for n in os.listdir(d.storage.path)
+                if n.startswith("_append_")]
+    d.insert(Point(time=T0, measurement="cpu", fields={"temp": 3.0}))
+    assert len(d) == 5
+    assert d.get(FieldQuery().temp == 3.0).measurement == "cpu"
+    d.close()

@@ -7,6 +7,7 @@ world; a dimension join that doesn't broadcast shuffles the fact table.
 mechanisms.)
 """
 
+import itertools
 from datetime import datetime, timedelta, timezone
 
 import pytest
@@ -683,12 +684,25 @@ def test_collect_arrow_batches_fallback_matches_fast_path(spark, monkeypatch):
     assert t_fast.sort_by("id").to_pydict() == t_slow.sort_by("id").to_pydict()
 
 
+_job_groups = itertools.count()
+
+
+def _spark_jobs(spark, call) -> int:
+    """Number of Spark jobs ``call()`` runs."""
+    sc = spark.sparkContext
+    group = f"counted-call-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
 def test_driver_bound_reads_run_one_job(spark, tmp_path):
     """Reads whose whole answer goes to Python filter in Spark and order
     on the driver: one collect job. A Spark global sort there would add
     a range-partition sampling job and a shuffle, and fail this guard."""
-    import itertools
-
     d = TinyFluxSpark(str(tmp_path / "jobs"), spark=spark)
     for batch in range(3):
         d.insert_multiple(
@@ -698,17 +712,9 @@ def test_driver_bound_reads_run_one_job(spark, tmp_path):
             for i in range(6)
         )
     assert d.storage.parquet_file_count() > 3
-    sc = spark.sparkContext
-    groups = itertools.count()
 
     def jobs(call) -> int:
-        group = f"driver-bound-read-{next(groups)}"
-        sc.setJobGroup(group, group)
-        try:
-            call()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return _spark_jobs(spark, call)
 
     q = FieldQuery().t >= 2
     for srt in (True, False):
@@ -716,6 +722,23 @@ def test_driver_bound_reads_run_one_job(spark, tmp_path):
         assert jobs(lambda: d.search(q, sorted=srt)) == 1
         assert jobs(lambda: d.all(sorted=srt)) == 1
     assert jobs(d.get_measurements) <= 2
+    d.close()
+
+
+def test_flush_runs_no_job_and_dml_counts_once(spark, tmp_path):
+    """A parquet flush is written on the driver: no Spark job. update
+    and remove count matches and rows in one aggregate over their
+    cached frame; a second count there costs two more jobs."""
+    d = TinyFluxSpark(str(tmp_path / "wjobs"), spark=spark)
+    pts = [Point(time=T0 + timedelta(hours=i), measurement="ab"[i % 2],
+                 fields={"v": float(i)}) for i in range(10)]
+    assert _spark_jobs(spark, lambda: d.insert_multiple(pts)) == 0
+    assert d.storage.parquet_file_count() == 2
+    assert _spark_jobs(
+        spark, lambda: d.update(FieldQuery().v >= 5, fields={"w": 1.0})
+    ) <= 5
+    assert _spark_jobs(spark, lambda: d.remove(FieldQuery().v >= 8)) <= 5
+    assert len(d) == 8 and d.count(FieldQuery().w == 1.0) == 3
     d.close()
 
 

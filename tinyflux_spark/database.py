@@ -68,6 +68,7 @@ from .storages import (
     ParquetStorage,
     PDATE_COL,
     Storage,
+    utc_date_str,
 )
 
 
@@ -151,12 +152,6 @@ def _prunable_time_bounds(q: Query):
             hi = max(hi1, hi2) if hi1 is not None and hi2 is not None else None
             return (lo, hi)
     return (None, None)
-
-
-def _utc_date_str(t: datetime) -> str:
-    if t.tzinfo is not None:
-        t = t.astimezone(timezone.utc)
-    return t.strftime("%Y-%m-%d")
 
 
 class TinyFluxSpark:
@@ -452,9 +447,9 @@ class TinyFluxSpark:
             if PDATE_COL in df.columns:
                 lo, hi = _prunable_time_bounds(query)
                 if lo is not None:
-                    df = df.where(F.col(PDATE_COL) >= _utc_date_str(lo))
+                    df = df.where(F.col(PDATE_COL) >= utc_date_str(lo))
                 if hi is not None:
-                    df = df.where(F.col(PDATE_COL) <= _utc_date_str(hi))
+                    df = df.where(F.col(PDATE_COL) <= utc_date_str(hi))
             df = df.where(query.compile(indexed=self._storage.index_cols))
         return df.drop(PDATE_COL, *self._storage.index_cols.values())
 
@@ -899,13 +894,16 @@ class TinyFluxSpark:
         )
         updated = updated.cache()
         try:
-            n_changed = updated.where(F.col("_changed")).count()
+            # One job counts the changes and sizes the rewrite.
+            n_changed, nrows = updated.agg(
+                F.count_if(F.col("_changed")), F.count(F.lit(1))
+            ).first()
             if n_changed:
                 self._storage.overwrite(
                     updated.drop("_changed"),
                     measurements=scope if scope else None,
                     date_range=date_range,
-                    nrows=updated.count(),  # cached — cheap second count
+                    nrows=nrows,
                 )
             return n_changed
         finally:
@@ -917,8 +915,8 @@ class TinyFluxSpark:
         if lo is None and hi is None:
             return None
         return (
-            _utc_date_str(lo) if lo is not None else None,
-            _utc_date_str(hi) if hi is not None else None,
+            utc_date_str(lo) if lo is not None else None,
+            utc_date_str(hi) if hi is not None else None,
         )
 
     def _apply_scope(
@@ -961,13 +959,15 @@ class TinyFluxSpark:
         df, date_range = self._apply_scope(df, scope, date_range)
         df = df.cache()
         try:
-            n_removed = df.where(pred).count()
+            n_removed, nrows = df.agg(
+                F.count_if(pred), F.count(F.lit(1))
+            ).first()
             if n_removed:
                 self._storage.overwrite(
                     df.where(~pred),
                     measurements=scope if scope else None,
                     date_range=date_range,
-                    nrows=df.count() - n_removed,  # cached — cheap
+                    nrows=nrows - n_removed,
                 )
             return n_removed
         finally:
@@ -1039,7 +1039,7 @@ class TinyFluxSpark:
 
         if agg not in FIELD_AGGS:
             raise ValueError(f"downsample: unsupported agg {agg!r}")
-        cutoff_date = _utc_date_str(older_than)
+        cutoff_date = utc_date_str(older_than)
         parquet = isinstance(self._storage, ParquetStorage)
         # Storages without scoped overwrite (CSV) take the full-rewrite
         # path: the frame carries every surviving row, in-scope or not.

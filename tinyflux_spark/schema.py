@@ -25,6 +25,7 @@ to its durable format.
 from __future__ import annotations
 
 import os
+from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -81,23 +82,55 @@ def get_spark(
     return spark
 
 
+def points_to_arrow(points, seq_start: Optional[int] = None):
+    """Points as a ``pyarrow.Table``: ``time`` (UTC microseconds),
+    ``measurement``, and the ``tags`` / ``fields`` maps in each Point's
+    key order, plus ``_seq`` numbered from ``seq_start`` when given.
+
+    The one Points-to-columns converter: ``points_to_df`` hands its
+    table to Spark, and ``ParquetStorage.append_points`` writes it to
+    parquet without Spark. Field values go to float like
+    ``Point.to_row``.
+    """
+    import pyarrow as pa
+
+    pts = list(points)
+    cols = {
+        "time": pa.array([p.time for p in pts], pa.timestamp("us", tz="UTC")),
+        "measurement": pa.array([p.measurement for p in pts], pa.string()),
+        "tags": pa.array(
+            [p.tags for p in pts], pa.map_(pa.string(), pa.string())
+        ),
+        "fields": pa.array(
+            [
+                {k: None if v is None else float(v)
+                 for k, v in p.fields.items()}
+                for p in pts
+            ],
+            pa.map_(pa.string(), pa.float64()),
+        ),
+    }
+    if seq_start is not None:
+        cols[SEQ_COL] = pa.array(
+            range(seq_start, seq_start + len(pts)), pa.int64()
+        )
+    return pa.table(cols)
+
+
 def points_to_df(
     spark: SparkSession, points, with_seq: bool = False, seq_start: int = 0
 ) -> DataFrame:
     """Create a DataFrame in the canonical schema from an iterable of Points.
 
-    Driver-side by design: this is the MemoryStorage/createDataFrame path
-    used for small batches and tests; bulk data enters via parquet/CSV
-    readers, never through Python objects.
+    Driver-side by design: this is the MemoryStorage/CSVStorage read
+    path and the tests' way in; bulk data enters via parquet/CSV
+    readers, never through Python objects. The rows go to the JVM as
+    one Arrow table (``points_to_arrow``), with no Python worker.
     """
-    rows = []
-    for i, p in enumerate(points):
-        row = p.to_row()
-        if with_seq:
-            row = row + (seq_start + i,)
-        rows.append(row)
-    schema = POINT_SCHEMA_SEQ if with_seq else POINT_SCHEMA
-    return spark.createDataFrame(rows, schema=schema)
+    table = points_to_arrow(points, seq_start if with_seq else None)
+    return spark.createDataFrame(
+        table, schema=POINT_SCHEMA_SEQ if with_seq else POINT_SCHEMA
+    )
 
 
 def collect_arrow_batches(df: DataFrame):
