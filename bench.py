@@ -122,21 +122,30 @@ def _emit() -> None:
         compact["n_errors"] = len(RESULT["errors"])
     # Stay under the 2000-char stdout window even as the registry
     # grows. Compact separators first; then drop the qps blocks (they
-    # live in the sidecar's `derived` anyway); as a last resort KEEP
-    # the per-query dict but truncate it to the largest-N timings —
-    # rounds 11-12 dropped `queries` wholesale here and the driver's
-    # per-query comparison came back empty two rounds running
-    # (PERF_r12.per_query == {}), so the slowest queries must survive
-    # the squeeze.
+    # live in the sidecar's `derived` anyway); then truncate the
+    # per-query dict to the largest-N timings — rounds 11-12 dropped
+    # `queries` wholesale here and the driver's per-query comparison
+    # came back empty two rounds running (PERF_r12.per_query == {}),
+    # so the slowest queries must survive the squeeze. Only once
+    # `queries` is empty do the remaining optional figures go, so the
+    # line fits whatever they hold. `n_queries_shown` is always set:
+    # a reader can tell a full set from a truncated one without the
+    # sidecar.
     _dumps = lambda o: json.dumps(o, separators=(",", ":"))  # noqa: E731
+    fits = lambda: len(_dumps(compact)) <= 1950  # noqa: E731
+    q = compact["queries"]
+    compact["n_queries_shown"] = len(q)
     for drop in ("qps_c16", "qps"):
-        if len(_dumps(compact)) <= 1950:
+        if fits():
             break
         compact.pop(drop, None)
-    while len(_dumps(compact)) > 1950 and compact.get("queries"):
-        q = compact["queries"]
+    while q and not fits():
         q.pop(min(q, key=q.get))
         compact["n_queries_shown"] = len(q)
+    for drop in ("detail", "floor_ms", "dml_s", "ingest_pts_s"):
+        if fits():
+            break
+        compact.pop(drop, None)
     print(_dumps(compact), flush=True)
 
 
@@ -334,312 +343,7 @@ def _scale_probe(spark) -> dict:
             r["out_rows_ratio"] = round(
                 r["rows_large"] / r["rows_small"], 3
             )
-    try:
-        out["synthetic_10x"] = _synthetic_10x_probe(spark)
-    except Exception as e:  # noqa: BLE001 — evidence, not a gate
-        out["synthetic_10x"] = {"error": repr(e)[:200]}
     return out
-
-
-def _bin_width_probe(spark) -> dict:
-    """interval_join's documented cost model, measured: intervals
-    replicate ceil(span / bin_width) + 1 times (more rows at small
-    bins), while each bin's candidate fan-in grows with large bins
-    (more residual-BETWEEN work). Three timed points at 0.5x / 1x / 2x
-    the typical q84 span (~16 days) record where the tradeoff lands on
-    this host instead of trusting a hand-picked constant — sf0.1 runs
-    have measured both slopes, so the numbers, not the model, are the
-    record. Results are identical at every width (the residual BETWEEN
-    makes bin_width purely physical; property-tested across widths in
-    tests/test_property_joins.py)."""
-    out = {}
-    for w in (8, 16, 32):
-        df = entry_mod.q84_interval_join(spark, SF_DIR, bin_width=w)
-        df.write.format("noop").mode("overwrite").save()  # warm
-        sec = min(
-            _timed(
-                lambda: df.write.format("noop").mode("overwrite").save()
-            )
-            for _ in range(2)
-        )
-        out[f"bin_width_{w}"] = round(sec, 4)
-    return out
-
-
-def _q102_sink_probe(spark) -> dict:
-    """Measured cost of stream_semantic_dedup_insert's per-batch pair
-    scan, old vs new implementation, at a 10x batch (the round-7
-    vectorization's receipt): the same (batch-assignment x
-    corpus-assignment) cluster join scored two ways — the r6
-    interpreted aggregate(zip_with) per-pair fold vs the r7
-    cluster-cogrouped blocked-Gram applyInPandas. Both produce
-    identical pairs (asserted); the timings show the fold cost gone.
-    """
-    import numpy as np
-    import pandas as pd
-
-    from tinyflux_spark.operators.similarity import (
-        _GRAM_BLOCK,
-        ivf_centroids,
-        semantic_assign,
-    )
-    from tinyflux_spark.operators.text import embed_bow
-
-    docs = entry_mod._t("documents")(spark, SF_DIR)
-    corpus = docs.where(F.col("doc_id") % 5 != 0)
-    # 10x batch: the full shard replicated 10 times with disjoint ids
-    shard = docs.where(F.col("doc_id") % 5 == 0)
-    reps = spark.range(10).select(F.col("id").alias("_rep"))
-    batch = shard.crossJoin(F.broadcast(reps)).select(
-        (F.col("doc_id") * 10 + F.col("_rep")).alias("doc_id"), "text"
-    )
-    tau = 0.9
-    cvecs = embed_bow(corpus, "doc_id", "text", dim=64)
-    cents = ivf_centroids(cvecs, "id", "embedding", 16)
-    casg = semantic_assign(cvecs, cents, "id", "embedding").localCheckpoint()
-    basg = semantic_assign(
-        embed_bow(batch, "doc_id", "text", dim=64), cents, "id", "embedding"
-    ).localCheckpoint()
-    left = basg.select(
-        F.col("id").alias("id_left"), F.col("cluster").alias("_cl"),
-        F.col("_u").alias("_ul"),
-    )
-    right = casg.select(
-        F.col("id").alias("id_right"), F.col("cluster").alias("_cl"),
-        F.col("_u").alias("_ur"),
-    )
-
-    def fold_pairs():
-        dot = F.aggregate(
-            F.zip_with("_ul", "_ur", lambda x, y: x * y),
-            F.lit(0.0), lambda acc, v: acc + v,
-        )
-        return (
-            left.join(right, "_cl")
-            .select("id_left", "id_right", F.round(dot, 6).alias("cosine"))
-            .where(F.col("cosine") >= tau)
-        )
-
-    pre_tau = tau - 1e-6
-    _empty = pd.DataFrame(columns=["id_left", "id_right", "raw_cos"])
-
-    def _batch_pairs(lpdf, rpdf):
-        lk = lpdf[lpdf["_ul"].notna()].reset_index(drop=True)
-        rk = rpdf[rpdf["_ur"].notna()].reset_index(drop=True)
-        if lk.empty or rk.empty:
-            return _empty
-        XL = np.vstack(lk["_ul"].to_numpy())
-        XR = np.vstack(rk["_ur"].to_numpy())
-        frames = []
-        for lo in range(0, len(XR), _GRAM_BLOCK):
-            hi = min(lo + _GRAM_BLOCK, len(XR))
-            gram = np.zeros((len(XL), hi - lo))
-            for j in range(XL.shape[1]):
-                gram += np.outer(XL[:, j], XR[lo:hi, j])
-            ia, ib = np.nonzero(gram >= pre_tau)
-            if len(ia):
-                frames.append(pd.DataFrame({
-                    "id_left": lk["id_left"].to_numpy()[ia],
-                    "id_right": rk["id_right"].to_numpy()[ib + lo],
-                    "raw_cos": gram[ia, ib],
-                }))
-        return pd.concat(frames, ignore_index=True) if frames else _empty
-
-    def gram_pairs():
-        return (
-            left.groupBy("_cl").cogroup(right.groupBy("_cl"))
-            .applyInPandas(
-                _batch_pairs, "id_left long, id_right long, raw_cos double"
-            )
-            .select(
-                "id_left", "id_right",
-                F.round("raw_cos", 6).alias("cosine"),
-            )
-            .where(F.col("cosine") >= tau)
-        )
-
-    out: dict = {"batch_rows": batch.count()}
-    for label, build in (("fold_sec", fold_pairs), ("gram_sec", gram_pairs)):
-        build().write.format("noop").mode("overwrite").save()
-        out[label] = round(_timed(
-            lambda: build().write.format("noop").mode("overwrite").save()
-        ), 3)
-    out["results_agree"] = (
-        fold_pairs().exceptAll(gram_pairs()).isEmpty()
-        and gram_pairs().exceptAll(fold_pairs()).isEmpty()
-    )
-    return out
-
-
-def _skew_join_probe(spark) -> dict:
-    """Measured AQE-skew-split vs salting comparison (the docstring on
-    salted_join prescribes when to prefer each; this records the data).
-    A deliberately skewed large×large equi-join — 60% of the events
-    rows collapse onto ONE hot key, the rest spread over 100k keys —
-    runs three ways with broadcast disabled (the right side would
-    otherwise broadcast and dodge the skew entirely): sort-merge with
-    AQE's skew-join split, sort-merge with AQE off (the straggler
-    baseline), and salted_join(n_salts=8). All three must agree on the
-    aggregate; the timings show the rewrite's price/benefit on this
-    host. At cluster scale the no-AQE straggler grows with the hot
-    key's row mass while the other two stay balanced."""
-    from tinyflux_spark.operators.aggregates import salted_join
-
-    ev = entry_mod.load_events(spark, SF_DIR)
-    # x8 replication: at sf0.1 the raw 1M rows finish in ~50 ms per
-    # join — too fast for the straggler to surface above dispatch
-    # noise. 8M rows put ~5M on the hot key: one ~5M-row sort-merge
-    # partition vs 32 balanced ones is visible wall-clock.
-    reps = spark.range(8).select(F.col("id").alias("_rep"))
-    left = ev.crossJoin(F.broadcast(reps)).select(
-        F.when(F.col("event_id") % 10 < 6, F.lit(0))
-        .otherwise(F.col("event_id") % 100000)
-        .cast("long")
-        .alias("k"),
-        "value",
-    )
-    right = spark.range(100000).select(
-        F.col("id").alias("k"), (F.col("id") % 97).alias("w")
-    )
-    builds = {
-        "smj_aqe_skew": lambda: left.join(right, "k"),
-        "smj_no_aqe": lambda: left.join(right, "k"),
-        "salted_8": lambda: salted_join(left, right, ["k"], n_salts=8),
-    }
-    aqe_for = {"smj_aqe_skew": "true", "smj_no_aqe": "false",
-               "salted_8": "false"}
-    keys = (
-        "spark.sql.adaptive.enabled",
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.autoBroadcastJoinThreshold",
-    )
-    prev = {k: spark.conf.get(k) for k in keys}
-    out: dict = {}
-    counts = set()
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        for mode, build in builds.items():
-            spark.conf.set("spark.sql.adaptive.enabled", aqe_for[mode])
-
-            # Rebuild the plan for every run: repeated actions on ONE
-            # DataFrame object reuse its shuffle map stages, which
-            # would time only the final reduce (~45 ms) instead of the
-            # join. A fresh lineage re-shuffles.
-            # decimal sum: exact and order-independent, so the three
-            # modes' checksums compare without float-sum drift.
-            def agg_run(build=build):
-                return build().groupBy().agg(
-                    F.count("*").alias("n"),
-                    F.sum(
-                        F.col("value").cast("decimal(18,6)")
-                        + F.col("w").cast("decimal(18,6)")
-                    ).alias("s"),
-                ).collect()
-
-            rows = agg_run()  # warm
-            counts.add((rows[0]["n"], str(rows[0]["s"])))
-            out[mode] = round(
-                min(_timed(agg_run) for _ in range(2)), 4
-            )
-    finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
-    out["results_agree"] = len(counts) == 1
-    return out
-
-
-def _synthetic_10x_probe(spark) -> dict:
-    """Third scale point: the current SF's events/documents (and
-    lineitem/orders for the join heavies) replicated 10× with shifted
-    keys (events also shifted +31 days per replica so time buckets
-    don't collide; doc/order ids offset so no artificial duplicate
-    explosion and join multiplicity is preserved), giving a measured
-    100× curve (small → large → synthetic 10×·large) for the
-    throughput operators whose work genuinely grows with rows —
-    including the round-4/5 heavies q80/q82/q86/q89, so their
-    linear-shuffle docstring claims carry evidence beyond sf0.1."""
-    synth = os.path.join(
-        tempfile.gettempdir(), f"tfs_synth10x_{os.getpid()}"
-    )
-    ev = entry_mod.load_events(spark, SF_DIR)
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    n_ev = ev.agg(F.max("event_id")).collect()[0][0] + 1
-    n_doc = docs.agg(F.max("doc_id")).collect()[0][0] + 1
-    n_ord = orders.agg(F.max("o_orderkey")).collect()[0][0] + 1
-    reps = spark.range(10).select(F.col("id").alias("_rep"))
-    (
-        ev.crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("event_id") + F.col("_rep") * n_ev).alias("event_id"),
-            (
-                F.col("ts")
-                + F.make_interval(days=F.col("_rep").cast("int") * 31)
-            ).alias("ts"),
-            "user_id", "event_type", "value", "props",
-        )
-        .write.mode("overwrite").parquet(f"{synth}/events.parquet")
-    )
-    (
-        docs.crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("doc_id") + F.col("_rep") * n_doc).alias("doc_id"),
-            "text", "lang", "source", "n_chars",
-        )
-        .write.mode("overwrite").parquet(f"{synth}/documents.parquet")
-    )
-    # join heavies: offset BOTH sides' orderkey by the same stride so
-    # each replica joins only its own replica — output grows 10×, like
-    # a real 10× corpus, not 100× like a key collision would
-    (
-        li.crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("l_orderkey") + F.col("_rep") * n_ord).alias(
-                "l_orderkey"
-            ),
-            "l_suppkey", "l_extendedprice", "l_discount",
-        )
-        .write.mode("overwrite").parquet(f"{synth}/lineitem.parquet")
-    )
-    (
-        orders.crossJoin(F.broadcast(reps))
-        .select(
-            (F.col("o_orderkey") + F.col("_rep") * n_ord).alias(
-                "o_orderkey"
-            ),
-            "o_orderpriority",
-        )
-        .write.mode("overwrite").parquet(f"{synth}/orders.parquet")
-    )
-    res = {"rows_events": int(n_ev) * 10, "rows_documents": int(n_doc) * 10}
-    try:
-        for qname in (
-            "q60_resample_gapfill",
-            "q62_top_tokens",
-            "q80_incremental_dedup_join",
-            "q82_remove_boilerplate",
-            "q86_salted_join",
-            "q89_excise_duplicate_spans",
-        ):
-            fn = entry_mod.queries()[qname]
-            # warm pass doubles as the output-rows measurement; the
-            # timed pass REBUILDS the plan (fresh DataFrame object) so
-            # shuffle-stage reuse can't hide the join/shuffle cost,
-            # and EAGER_PER_RUN builds (q89's gram checkpoint) land
-            # inside the timed window.
-            rows = fn(spark, synth).count()
-            sec = _timed(
-                lambda: fn(spark, synth)
-                .write.format("noop")
-                .mode("overwrite")
-                .save()
-            )
-            res[qname] = {"sec_10x": round(sec, 4), "rows_10x": rows}
-    finally:
-        shutil.rmtree(synth, ignore_errors=True)
-    return res
 
 
 # Queries that do their dominant work EAGERLY at DataFrame-build time
@@ -932,21 +636,6 @@ def main() -> None:
         derived["scaling"] = _scale_probe(spark)
     except Exception as e:  # noqa: BLE001
         errors["scaling"] = repr(e)[:200]
-
-    try:
-        derived["interval_join_bin_width"] = _bin_width_probe(spark)
-    except Exception as e:  # noqa: BLE001
-        errors["bin_width_probe"] = repr(e)[:200]
-
-    try:
-        derived["skew_join_comparison"] = _skew_join_probe(spark)
-    except Exception as e:  # noqa: BLE001
-        errors["skew_join_probe"] = repr(e)[:200]
-
-    try:
-        derived["q102_sink_10x_batch"] = _q102_sink_probe(spark)
-    except Exception as e:  # noqa: BLE001
-        errors["q102_sink_probe"] = repr(e)[:200]
 
     # DML round-trip wall time, end to end (store build + 2 updates +
     # remove + read-back). Reported separately: the reference baseline

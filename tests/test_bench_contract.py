@@ -64,6 +64,7 @@ def test_emit_line_fits_harness_window(bench_mod, tmp_path, capsys):
     assert d["metric"] == "headline_queries_total"
     assert d["value"] == 34.5678 and d["sf"] == 0.1
     assert len(d["queries"]) == 91                # every query, short key
+    assert d["n_queries_shown"] == 91             # set when nothing dropped
     assert d["queries"]["q91"] == 1.234
     assert d["qps"]["range_query"] == 77.0
     # the full document (long names, scaling, floor_note) is on disk
@@ -81,6 +82,24 @@ def test_emit_degrades_gracefully_if_registry_triples(bench_mod, capsys):
     # headline figures survive even when the query block must drop
     assert d["value"] == 34.5678
     assert d["ingest_pts_s"] == 93100.0
+
+
+def test_emit_fits_when_fixed_fields_alone_overflow(bench_mod, capsys):
+    # Draining `queries` is not enough when the remaining figures alone
+    # outgrow the window (here a DML figure that grew into a per-step
+    # block): the optional figures go next, the headline stays, and
+    # n_queries_shown says how many query timings made it.
+    bench_mod.RESULT.update(_fat_result(5))
+    bench_mod.RESULT["derived"]["dml_roundtrip_sec"] = {
+        f"step_{i:03d}": 1.2345 for i in range(150)
+    }
+    bench_mod._emit()
+    line = capsys.readouterr().out.strip()
+    assert len(line) <= 2000
+    d = json.loads(line)
+    assert d["value"] == 34.5678 and d["sf"] == 0.1
+    assert d["queries"] == {} and d["n_queries_shown"] == 0
+    assert "dml_s" not in d
 
 
 def test_emit_marks_partial_and_errors(bench_mod, capsys):

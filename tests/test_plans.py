@@ -298,7 +298,23 @@ def test_scrub_and_chunk_stay_narrow(spark):
     )
 
 
-def test_no_plan_antipatterns_across_registered_queries(spark):
+@pytest.fixture(scope="module")
+def registry_plans(spark):
+    """Every registered gate query built ONCE at sf0.001, as
+    ``{name: (physical plan, output schema)}``. The registry sweeps
+    below share it: building all the queries is the slow part, and
+    each sweep only reads the plan or the schema."""
+    import __spark_entry__ as em
+
+    sf = "/root/testdata/sf0.001"
+    out = {}
+    for name, fn in em.queries().items():
+        df = fn(spark, sf)
+        out[name] = (plan_of(df), df.schema)
+    return out
+
+
+def test_no_plan_antipatterns_across_registered_queries(registry_plans):
     """Sweep every registered gate query's physical plan for scale
     anti-patterns: cartesian/nested-loop joins (an equi-join key should
     always exist), [current, unbounded following] window frames (per-row
@@ -306,9 +322,6 @@ def test_no_plan_antipatterns_across_registered_queries(spark):
     arbitrary-Python surfaces (.test/.map — q47). Queries whose plan
     is legitimately driver-composed (store builds, streaming) still
     compile; the assertion runs on whatever DataFrame they return."""
-    import __spark_entry__ as em
-
-    sf = "/root/testdata/sf0.001"
     # q47 runs the reference's arbitrary-Python .test/.map predicates —
     # the documented UDF surface.
     udf_ok = {"q47_map_test_predicates"}
@@ -381,9 +394,7 @@ def test_no_plan_antipatterns_across_registered_queries(spark):
         "q131_index_recall_probe",
     }
     bad = {}
-    for name, fn in em.queries().items():
-        df = fn(spark, sf)
-        plan = plan_of(df)
+    for name, (plan, _) in registry_plans.items():
         problems = []
         if "CartesianProduct" in plan:
             problems.append("CartesianProduct")
@@ -404,7 +415,9 @@ def test_no_plan_antipatterns_across_registered_queries(spark):
     assert not bad, f"plan anti-patterns: {bad}"
 
 
-def test_registered_queries_return_scalar_only_columns(spark):
+def test_registered_queries_return_scalar_only_columns(
+    spark, registry_plans
+):
     """Entry contract: every gate query's output schema is scalar-only.
     The driver's result canonicalizer does pandas sort_values over
     object columns and crashes on array/map/struct cells — this burned
@@ -413,15 +426,11 @@ def test_registered_queries_return_scalar_only_columns(spark):
     plus the matching check in tools/check_gate.py closes the class."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    import __spark_entry__ as em
-
-    sf = "/root/testdata/sf0.001"
     bad = {}
-    for name, fn in em.queries().items():
-        df = fn(spark, sf)
+    for name, (_, schema) in registry_plans.items():
         nonscalar = [
             f.name
-            for f in df.schema.fields
+            for f in schema.fields
             if isinstance(f.dataType, (ArrayType, MapType, StructType))
         ]
         if nonscalar:

@@ -25,8 +25,13 @@ under the spread) pay the planning once per process, not per call
 latency on q113/q134). The memo holds partition COUNTS, never data —
 purely physical, advisory, and process-local: a stale width can only
 mis-place one repartition, never change results. It is keyed by
-(applicationId, plan hash) so a new session never reads another
-session's widths.
+(applicationId, plan hash), so it is application-wide: sessions made
+with ``newSession()`` share the SparkContext and its applicationId,
+and therefore share entries. A session whose SQL conf changes the
+physical width of the same analyzed plan (e.g. a different
+``maxPartitionBytes``) can read a stale width; that misplaces at most
+one advisory repartition. Only a new SparkContext starts a fresh key
+space.
 
 Hash-partitioning on the operator's id column (when given) keeps the
 exchange deterministic without the local sort a round-robin
@@ -37,13 +42,16 @@ row order is immaterial to every caller (aggregations / per-row maps).
 from __future__ import annotations
 
 import os
+from typing import Union
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 
 # (applicationId, analyzed-plan semanticHash) -> physical partition
-# count. Bounded: cleared wholesale past _WIDTH_MEMO_MAX (simple and
-# safe — entries are one int each; the bound exists only to keep a
-# pathological plan-generating loop from growing it without limit).
+# count, shared by every session of the application (see the module
+# docstring for what a stale entry can and cannot do). Bounded:
+# cleared wholesale past _WIDTH_MEMO_MAX (simple and safe — entries
+# are one int each; the bound exists only to keep a pathological
+# plan-generating loop from growing it without limit).
 _WIDTH_MEMO: dict = {}
 _WIDTH_MEMO_MAX = 4096
 
@@ -74,13 +82,16 @@ def _plan_width(df: DataFrame):
     return n
 
 
-def spread_scan(df: DataFrame, *part_cols: str) -> DataFrame:
+def spread_scan(
+    df: DataFrame, *part_cols: Union[str, Column]
+) -> DataFrame:
     """Repartition ``df`` to ``defaultParallelism`` iff its physical
     plan currently yields fewer partitions — the single-row-group /
     small-files escape hatch for compute-bound operators. No-op (and
     no added exchange) on well-partitioned inputs, so it is safe at
     any scale. Pass the operator's id column(s) to use a deterministic
-    hash exchange instead of round-robin."""
+    hash exchange instead of round-robin; each may be a column name
+    or a Column expression (``interval_join`` passes a row hash)."""
     # Kill switch for A/B measurement and for deployments whose input
     # layout makes the widening unnecessary (TINYFLUX_SPARK_NO_SPREAD=1).
     if os.environ.get("TINYFLUX_SPARK_NO_SPREAD"):

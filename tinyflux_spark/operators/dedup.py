@@ -32,7 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ._spread import spread_scan
-from .text import fingerprint, null_to_empty
+from .text import fingerprint, null_to_empty, ws_tokens
 
 
 def _txt(text_col) -> Column:
@@ -59,11 +59,12 @@ def _norm_text(text_col) -> Column:
 
 def _norm_words(text_col) -> Column:
     """Token array of normalized text — same str/Column contract as
-    :func:`_norm_text`; the str path keeps the historical expression
-    (split of lowered text, no collapse pass) byte-for-byte."""
+    :func:`_norm_text`; the str path is the engine's whitespace
+    tokenizer, :func:`~tinyflux_spark.operators.text.ws_tokens` (split
+    of lowered text, no collapse pass)."""
     if isinstance(text_col, Column):
         return F.split(F.trim(F.coalesce(text_col, F.lit(""))), r"\s+")
-    return F.split(F.lower(F.trim(null_to_empty(text_col))), r"\s+")
+    return ws_tokens(text_col)
 
 
 def exact_dedup(

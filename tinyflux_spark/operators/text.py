@@ -67,28 +67,76 @@ def null_to_empty(text_col) -> Column:
     return F.coalesce(c, F.lit(""))
 
 
-def _spread_sources(
+def ws_tokens(text_col) -> Column:
+    """The engine's whitespace tokenizer: NULL→'', trim, lower, split
+    on ``\\s+`` (blank text yields ``[""]``). The vocabulary, LM,
+    BM25, embedding and dedup word operators all tokenize with it, and
+    the DuckDB oracles replay it token for token."""
+    return F.split(F.lower(F.trim(null_to_empty(text_col))), r"\s+")
+
+
+def _words(text_col) -> Column:
+    """Case-preserving whitespace words: NULL→'', trim, split on
+    ``\\s+``, and blank text yields ``[]`` — ``split("")`` yields
+    ``[""]``, which would make an empty document a one-word one (and,
+    say, a non-repetitive one that sails through a quality filter)."""
+    t = F.trim(null_to_empty(text_col))
+    return F.when(t == "", F.array().cast("array<string>")).otherwise(
+        F.split(t, r"\s+")
+    )
+
+
+def _lm_tokens(text_col, min_token_len: int) -> Column:
+    """The LM family's token array: :func:`ws_tokens` without tokens
+    shorter than ``min_token_len``."""
+    return F.filter(
+        ws_tokens(text_col), lambda t: F.length(t) >= min_token_len
+    )
+
+
+def _gram_structs(k: int) -> Column:
+    """Every k-gram of the ``_ws`` token array, in order, as a struct
+    ``(w1, ..., wk)``; callers guard ``size(_ws) >= k``."""
+    return F.transform(
+        F.sequence(F.lit(1), F.size("_ws") - (k - 1)),
+        lambda i: F.struct(
+            *[F.element_at("_ws", i + j).alias(f"w{j + 1}") for j in range(k)]
+        ),
+    )
+
+
+def _lm_token_arrays(
     df: DataFrame,
     id_col: str,
     text_col: str,
     ref: Optional[DataFrame],
-    ref_text_col: str,
+    ref_text_col: Optional[str],
+    min_token_len: int,
 ):
-    """Widen the doc and reference text scans when under-partitioned
-    (single-row-group / small-files inputs — see ``_spread``); the
-    tokenize/explode/partial-agg work that follows is per-row compute
-    and would otherwise run as one task per input file. Self-scoring
-    (``ref is None``) shares ONE spread so the partition check runs
-    once. Returns ``(doc_src, ref_src)`` carrying the original column
-    names; a no-op with zero added exchange on well-partitioned
-    inputs (the 100 TB case)."""
-    if ref is None:
-        src = spread_scan(df.select(id_col, text_col), id_col)
-        return src, src
-    return (
-        spread_scan(df.select(id_col, text_col), id_col),
-        spread_scan(ref.select(ref_text_col)),
+    """The LM scorers' :func:`_lm_tokens` arrays ``(doc, ref)``:
+    ``doc`` is ``(id, _ws)`` over ``df``; ``ref`` is ``(_ws)`` over
+    the reference corpus (``df`` when ``ref`` is None), of which only
+    the text column (``ref_text_col``, default ``text_col``) is read."""
+    doc_df = spread_scan(df.select(id_col, text_col), id_col)
+    ref_tc = text_col if ref_text_col is None else ref_text_col
+    ref_base = df if ref is None else ref
+    # Tokenize BELOW the spread exchange: the token arrays cross one
+    # exchange that AQE's stage cache shares across every count table,
+    # so the corpus is tokenized once per plan, not once per table. For
+    # that sharing to survive the optimizer, no consumer may push a
+    # filter beneath the exchange: each count table's `size >= k`
+    # guard is a `when()` in its OWN projection (explode drops the null
+    # array — row-for-row the same as the filter), not a `where()`. On
+    # wide inputs the spread is a no-op and each consumer tokenizes for
+    # itself, with no added exchange.
+    ref_arr = spread_scan(
+        ref_base.select(_lm_tokens(ref_tc, min_token_len).alias("_ws"))
     )
+    doc_arr = doc_df.select(
+        F.col(id_col).alias("id"),
+        _lm_tokens(text_col, min_token_len).alias("_ws"),
+    )
+    return doc_arr, ref_arr
 
 
 def normalize_text(
@@ -327,12 +375,7 @@ def repetition_stats(
     bigram list is built from a staged words column so the split runs
     once, not once per sequence element.
     """
-    t = F.trim(null_to_empty(text_col))
-    # split("") yields [""] — an empty doc would score as a one-word
-    # non-repetitive document and sail through a quality filter.
-    ws = F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
-    )
+    ws = _words(text_col)
     staged = df.select(F.col(id_col), ws.alias("_ws"))
     bigrams = F.expr(
         "CASE WHEN size(_ws) >= 2 THEN "
@@ -418,10 +461,7 @@ def top_tokens(
     aggregated (vocabulary-sized) relation, never a global row sort of
     the corpus.
     """
-    t = F.trim(null_to_empty(text_col))
-    toks = F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
-    )
+    toks = _words(text_col)
     return (
         df.select(F.explode(toks).alias("token"))
         .groupBy("token")
@@ -463,10 +503,7 @@ def top_tokens_by_key(
     if k < 1:
         raise ValueError("k must be >= 1")
     gc = F.col(group_col) if isinstance(group_col, str) else group_col
-    t = F.trim(null_to_empty(text_col))
-    toks = F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
-    )
+    toks = _words(text_col)
     counts = (
         df.where(gc.isNotNull())
         .select(gc.alias("group"), F.explode(toks).alias("token"))
@@ -520,10 +557,7 @@ def quality_filter(
     qf = quality_features(
         df.select(F.col(id_col), F.col(text_col)), text_col
     )
-    t = F.trim(null_to_empty(text_col))
-    ws = F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
-    )
+    ws = _words(text_col)
     staged = qf.withColumn("_ws", ws).withColumn(
         "_bg",
         F.expr(
@@ -652,10 +686,7 @@ def chunk_documents(
     if overlap >= chunk_words:
         raise ValueError("chunk_documents: overlap must be < chunk_words")
     stride = chunk_words - overlap
-    t = F.trim(null_to_empty(text_col))
-    ws = F.when(t == "", F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
-    )
+    ws = _words(text_col)
     staged = df.select(F.col(id_col), ws.alias("_ws"))
     chunks = F.expr(
         f"CASE WHEN size(_ws) = 0 THEN "
@@ -698,7 +729,7 @@ def bm25_scores(
     collect(), no corpus-wide wide rows.
     """
     terms = [t.lower() for t in query_terms]
-    toks = F.split(F.lower(F.trim(null_to_empty(text_col))), r"\s+")
+    toks = ws_tokens(text_col)
     base = df.select(
         F.col(id_col).alias("id"), F.size(toks).alias("dl"),
         toks.alias("_toks"),
@@ -758,7 +789,7 @@ def corpus_profile(
     both representable), not a sketch, because a data card is a
     publishable artifact.
     """
-    toks = F.split(F.lower(F.trim(null_to_empty(text_col))), r"\s+")
+    toks = ws_tokens(text_col)
     t = F.trim(null_to_empty(text_col))
     n_tokens = F.when(t == "", F.lit(0)).otherwise(F.size(toks))
     base = df.select(
@@ -888,12 +919,10 @@ def unigram_logprob(
     Returns one row per document that has at least one token of
     ``min_token_len``+ chars: ``id``, ``n_tokens``, ``avg_logp``.
     """
-    src, _ = _spread_sources(df, id_col, text_col, None, text_col)
+    src = spread_scan(df.select(id_col, text_col), id_col)
     toks = src.select(
         F.col(id_col).alias("id"),
-        F.explode(
-            F.split(F.lower(F.trim(null_to_empty(text_col))), r"\s+")
-        ).alias("tok"),
+        F.explode(ws_tokens(text_col)).alias("tok"),
     ).where(F.length("tok") >= min_token_len)
 
     vocab = toks.groupBy("tok").agg(F.count("*").alias("_cnt"))
@@ -936,22 +965,13 @@ def bigram_logprob(
     pass a held-out or filtered corpus (e.g. the English slice) to make
     the backoff paths meaningful. Only the text column is read from
     ``ref`` — it needs no id column, and ``ref_text_col`` (default:
-    ``text_col``) names its text column when the schemas differ — repetitive/boilerplate text scores
-    high, cross-lingual and gibberish text falls to the backoff/OOV
-    floor, and ``backoff_frac`` itself is a usable quality signal.
+    ``text_col``) names its text column when the schemas differ.
+    Repetitive/boilerplate text scores high, cross-lingual and
+    gibberish text falls to the backoff/OOV floor, and
+    ``backoff_frac`` itself is a usable quality signal.
 
-    Plan shape: token arrays built in-row (one projection), bigram and
-    unigram counts are two aggregations over the reference explode
-    (token-string shuffles, linear); the conditional table joins doc
-    bigrams on (w1, w2) — an equi-join Spark broadcasts while the
-    bigram table is small and shuffles at web scale, either way linear;
-    the 1-row total cross-joins in (bounded build by construction).
-
-    Determinism: same DECIMAL(20,12) quantization rule as
-    unigram_logprob — ln() over IEEE-exact count ratios is measured
-    bit-identical across engines, each per-bigram logp is quantized
-    before the per-document sum, so the sum is exact and
-    order-independent and a SQL oracle replays it bit-for-bit.
+    This is :func:`ngram_backoff_logprob` at ``order=2`` without
+    pruning; plan shape and determinism are documented there.
 
     Returns one row per document with >= 2 kept tokens: ``id``,
     ``n_bigrams``, ``avg_logp``, ``backoff_frac`` (fraction of bigrams
@@ -960,102 +980,11 @@ def bigram_logprob(
     — ``avg_logp`` comes back null (the lazy plan cannot raise without
     forcing an action on ``ref``).
     """
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError("alpha must be in (0, 1]")
-    ref_tc = text_col if ref_text_col is None else ref_text_col
-    doc_df = spread_scan(df.select(id_col, text_col), id_col)
-    ref_base = df if ref is None else ref
-
-    def tok_ws(tc: str):
-        return F.filter(
-            F.split(F.lower(F.trim(null_to_empty(tc))), r"\s+"),
-            lambda t: F.length(t) >= min_token_len,
-        )
-
-    def tok_arr(d: DataFrame, idc: str) -> DataFrame:
-        return d.select(F.col(idc).alias("id"), tok_ws(text_col).alias("_ws"))
-
-    bigram_structs = F.transform(
-        F.sequence(F.lit(1), F.size("_ws") - 1),
-        lambda i: F.struct(
-            F.element_at("_ws", i).alias("w1"),
-            F.element_at("_ws", i + 1).alias("w2"),
-        ),
-    )
-
-    # Ref side needs no id — project only its text column so a
-    # reference corpus with a different/absent id column works.
-    # Tokenize BELOW the spread exchange so both count tables share one
-    # tokenizer pass via AQE's stage cache (see ngram_backoff_logprob);
-    # the size guard stays a when() so no filter pushes beneath the
-    # shared exchange and splits it.
-    ref_arr = spread_scan(ref_base.select(tok_ws(ref_tc).alias("_ws")))
-    uni = (
-        ref_arr.select(F.explode("_ws").alias("tok"))
-        .groupBy("tok")
-        .agg(F.count("*").alias("_c1"))
-    )
-    total = uni.agg(F.sum("_c1").alias("_total"))
-    big = (
-        ref_arr.select(
-            F.explode(
-                F.when(F.size("_ws") >= 2, bigram_structs)
-            ).alias("b")
-        )
-        .select(F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("_c2"))
-    )
-    cond = (
-        big.join(uni.select(F.col("tok").alias("w1"), "_c1"), "w1")
-        .select(
-            "w1",
-            "w2",
-            F.log(F.col("_c2") / F.col("_c1"))
-            .cast("decimal(20,12)")
-            .alias("_lp2"),
-        )
-    )
-    # backoff table: alpha * unigram prob, quantized the same way; the
-    # ratio is computed first so both engines run the identical IEEE
-    # op sequence (divide, multiply, ln).
-    back = (
-        uni.crossJoin(F.broadcast(total))
-        .select(
-            F.col("tok").alias("w2"),
-            F.log(F.lit(alpha) * (F.col("_c1") / F.col("_total")))
-            .cast("decimal(20,12)")
-            .alias("_lpb"),
-        )
-    )
-
-    doc_big = (
-        tok_arr(doc_df, id_col)
-        .where(F.size("_ws") >= 2)
-        .select("id", F.explode(bigram_structs).alias("b"))
-        .select("id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-    )
-    scored = (
-        doc_big.join(cond, ["w1", "w2"], "left")
-        .join(back, "w2", "left")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "id",
-            F.coalesce(
-                "_lp2",
-                "_lpb",
-                F.log(F.lit(alpha) / F.col("_total")).cast(
-                    "decimal(20,12)"
-                ),
-            ).alias("_lp"),
-            F.col("_lp2").isNull().cast("int").alias("_miss"),
-        )
-    )
-    return scored.groupBy("id").agg(
-        F.count("*").alias("n_bigrams"),
-        (F.sum("_lp").cast("double") / F.count("*")).alias("avg_logp"),
-        F.round(F.sum("_miss") / F.count("*"), 6).alias("backoff_frac"),
-    )
+    return ngram_backoff_logprob(
+        df, id_col, text_col, ref, ref_text_col,
+        order=2, alpha=alpha, prune_min_count=1,
+        min_token_len=min_token_len,
+    ).withColumnRenamed("n_ngrams", "n_bigrams").drop("oov_frac")
 
 
 def trigram_logprob(
@@ -1079,24 +1008,13 @@ def trigram_logprob(
 
     with a = ``alpha`` (no normalization — Stupid Backoff's "score",
     not a probability, which is the point: it needs only count tables
-    and equi-joins). ``a^2`` is computed once in Python and passed as
-    one literal so the engine and oracle run the identical IEEE
-    product. Same reference-corpus contract as bigram_logprob: only
-    the text column is read from ``ref`` (``ref_text_col`` names it);
-    empty reference vocabulary → null ``avg_logp``.
+    and equi-joins). Same reference-corpus contract as bigram_logprob:
+    only the text column is read from ``ref`` (``ref_text_col`` names
+    it); empty reference vocabulary → null ``avg_logp``.
 
-    Plan shape: three count aggregations over the reference explode
-    (trigram/bigram/unigram — token-string shuffles, all linear), one
-    1-row total (bounded build), then the document trigrams left-join
-    the three conditional tables on (w1,w2,w3) / (w2,w3) / (w3) —
-    equi-joins that broadcast while the tables are small and shuffle
-    at web scale, either way linear in corpus size.
-
-    Determinism: identical DECIMAL(20,12) quantization rule as the
-    bigram/unigram family — each branch's ln() over IEEE-exact count
-    ratios is quantized before the per-document sum, so the sum is
-    exact and order-independent and the SQL oracle replays it
-    bit-for-bit.
+    This is :func:`ngram_backoff_logprob` at ``order=3`` without
+    pruning; plan shape and determinism (``a^2`` is one Python
+    literal shared with the oracle) are documented there.
 
     Returns one row per document with >= 3 kept tokens: ``id``,
     ``n_trigrams``, ``avg_logp``, ``backoff_frac`` (fraction of
@@ -1105,127 +1023,11 @@ def trigram_logprob(
     the bigram table too: unigram or floor — the stronger
     out-of-domain signal).
     """
-    if not 0.0 < alpha <= 1.0:
-        raise ValueError("alpha must be in (0, 1]")
-    alpha2 = alpha * alpha
-    ref_tc = text_col if ref_text_col is None else ref_text_col
-    doc_df = spread_scan(df.select(id_col, text_col), id_col)
-    ref_base = df if ref is None else ref
-
-    def tok_ws(tc: str):
-        return F.filter(
-            F.split(F.lower(F.trim(null_to_empty(tc))), r"\s+"),
-            lambda t: F.length(t) >= min_token_len,
-        )
-
-    def gram_structs(k: int):
-        return F.transform(
-            F.sequence(F.lit(1), F.size("_ws") - (k - 1)),
-            lambda i: F.struct(
-                *[
-                    F.element_at("_ws", i + j).alias(f"w{j + 1}")
-                    for j in range(k)
-                ]
-            ),
-        )
-
-    # Tokenize below the spread exchange — one shared tokenizer pass
-    # for all three count tables (see ngram_backoff_logprob); size
-    # guards stay in the consumers' projections so nothing pushes
-    # beneath the shared exchange.
-    ref_arr = spread_scan(ref_base.select(tok_ws(ref_tc).alias("_ws")))
-    uni = (
-        ref_arr.select(F.explode("_ws").alias("w1"))
-        .groupBy("w1")
-        .agg(F.count("*").alias("_c1"))
-    )
-    total = uni.agg(F.sum("_c1").alias("_total"))
-    big = (
-        ref_arr.select(
-            F.explode(
-                F.when(F.size("_ws") >= 2, gram_structs(2))
-            ).alias("b")
-        )
-        .select("b.w1", "b.w2")
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("_c2"))
-    )
-    tri = (
-        ref_arr.select(
-            F.explode(
-                F.when(F.size("_ws") >= 3, gram_structs(3))
-            ).alias("t")
-        )
-        .select("t.w1", "t.w2", "t.w3")
-        .groupBy("w1", "w2", "w3")
-        .agg(F.count("*").alias("_c3"))
-    )
-    # conditional tables, each branch quantized at build time
-    tri_cond = (
-        tri.join(big.select("w1", "w2", F.col("_c2").alias("_ctx2")),
-                 ["w1", "w2"])
-        .select(
-            "w1", "w2", "w3",
-            F.log(F.col("_c3") / F.col("_ctx2"))
-            .cast("decimal(20,12)")
-            .alias("_lp3"),
-        )
-    )
-    bi_back = (
-        # context of bigram (w1, w2) is its FIRST token: c(w1 w2)/c(w1)
-        big.join(uni.select("w1", F.col("_c1").alias("_ctx1")), "w1")
-        .select(
-            F.col("w1").alias("w2"),  # shift into the (w2, w3) keying
-            F.col("w2").alias("w3"),
-            F.log(F.lit(alpha) * (F.col("_c2") / F.col("_ctx1")))
-            .cast("decimal(20,12)")
-            .alias("_lp2"),
-        )
-    )
-    uni_back = (
-        uni.crossJoin(F.broadcast(total))
-        .select(
-            F.col("w1").alias("w3"),
-            F.log(F.lit(alpha2) * (F.col("_c1") / F.col("_total")))
-            .cast("decimal(20,12)")
-            .alias("_lp1"),
-        )
-    )
-
-    doc_tri = (
-        doc_df.select(F.col(id_col).alias("id"),
-                      tok_ws(text_col).alias("_ws"))
-        .where(F.size("_ws") >= 3)
-        .select("id", F.explode(gram_structs(3)).alias("t"))
-        .select("id", "t.w1", "t.w2", "t.w3")
-    )
-    scored = (
-        doc_tri.join(tri_cond, ["w1", "w2", "w3"], "left")
-        .join(bi_back, ["w2", "w3"], "left")
-        .join(uni_back, ["w3"], "left")
-        .crossJoin(F.broadcast(total))
-        .select(
-            "id",
-            F.coalesce(
-                "_lp3",
-                "_lp2",
-                "_lp1",
-                F.log(F.lit(alpha2) / F.col("_total")).cast(
-                    "decimal(20,12)"
-                ),
-            ).alias("_lp"),
-            F.col("_lp3").isNull().cast("int").alias("_miss3"),
-            (F.col("_lp3").isNull() & F.col("_lp2").isNull())
-            .cast("int")
-            .alias("_oov"),
-        )
-    )
-    return scored.groupBy("id").agg(
-        F.count("*").alias("n_trigrams"),
-        (F.sum("_lp").cast("double") / F.count("*")).alias("avg_logp"),
-        F.round(F.sum("_miss3") / F.count("*"), 6).alias("backoff_frac"),
-        F.round(F.sum("_oov") / F.count("*"), 6).alias("oov_frac"),
-    )
+    return ngram_backoff_logprob(
+        df, id_col, text_col, ref, ref_text_col,
+        order=3, alpha=alpha, prune_min_count=1,
+        min_token_len=min_token_len,
+    ).withColumnRenamed("n_ngrams", "n_trigrams")
 
 
 def perplexity_buckets(
@@ -1344,29 +1146,10 @@ def kneser_ney_logprob(
     if not 0.0 < discount < 1.0:
         raise ValueError("discount must be in (0, 1)")
     d = float(discount)
-    ref_tc = text_col if ref_text_col is None else ref_text_col
-    doc_df = spread_scan(df.select(id_col, text_col), id_col)
-    ref_base = df if ref is None else ref
-
-    def tok_ws(tc: str):
-        return F.filter(
-            F.split(F.lower(F.trim(null_to_empty(tc))), r"\s+"),
-            lambda t: F.length(t) >= min_token_len,
-        )
-
-    bigram_structs = F.transform(
-        F.sequence(F.lit(1), F.size("_ws") - 1),
-        lambda i: F.struct(
-            F.element_at("_ws", i).alias("w1"),
-            F.element_at("_ws", i + 1).alias("w2"),
-        ),
+    doc_arr, ref_arr = _lm_token_arrays(
+        df, id_col, text_col, ref, ref_text_col, min_token_len
     )
-
-    # Tokenize below the spread exchange — the bigram table and the
-    # vocabulary share one tokenizer pass (see ngram_backoff_logprob);
-    # the size guard stays a when() so nothing pushes beneath the
-    # shared exchange.
-    ref_arr = spread_scan(ref_base.select(tok_ws(ref_tc).alias("_ws")))
+    bigram_structs = _gram_structs(2)
     big = (
         ref_arr.select(
             F.explode(
@@ -1391,8 +1174,7 @@ def kneser_ney_logprob(
     )
 
     doc_big = (
-        doc_df.select(F.col(id_col).alias("id"), tok_ws(text_col).alias("_ws"))
-        .where(F.size("_ws") >= 2)
+        doc_arr.where(F.size("_ws") >= 2)
         .select("id", F.explode(bigram_structs).alias("b"))
         .select("id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
     )
@@ -1446,7 +1228,9 @@ def ngram_backoff_logprob(
     5-gram MT LM exactly this way: Stupid Backoff instead of KN
     because it needs only count tables, plus a count cutoff so the
     high-order tables fit). Generalizes the q85/q91/q94 ladder to any
-    order; ``order=5`` is the CCNet-adjacent production depth.
+    order; ``order=5`` is the CCNet-adjacent production depth, and
+    :func:`bigram_logprob` / :func:`trigram_logprob` are its unpruned
+    orders 2 and 3.
 
     score(w_i | w_{i-N+1..i-1}) walks k = N..2:
         c_k(last k tokens) / c_{k-1}(its context)  at the first k
@@ -1493,41 +1277,9 @@ def ngram_backoff_logprob(
     a_pow = [1.0]
     for _ in range(order - 1):
         a_pow.append(a_pow[-1] * alpha)
-    ref_tc = text_col if ref_text_col is None else ref_text_col
-    doc_df = spread_scan(df.select(id_col, text_col), id_col)
-    ref_base = df if ref is None else ref
-
-    def tok_ws(tc: str):
-        return F.filter(
-            F.split(F.lower(F.trim(null_to_empty(tc))), r"\s+"),
-            lambda t: F.length(t) >= min_token_len,
-        )
-
-    def gram_structs(k: int):
-        return F.transform(
-            F.sequence(F.lit(1), F.size("_ws") - (k - 1)),
-            lambda i: F.struct(
-                *[
-                    F.element_at("_ws", i + j).alias(f"w{j + 1}")
-                    for j in range(k)
-                ]
-            ),
-        )
-
-    # Tokenize BELOW the spread exchange, once for all N count tables:
-    # spreading the raw text (the old layout) left each count table
-    # re-running tokenize above the shared exchange — N regex passes
-    # over the corpus in one plan. Repartitioning the TOKENIZED arrays
-    # instead puts the tokenizer below a single exchange that AQE's
-    # stage cache shares across every consumer (guide §2.4). For that
-    # sharing to survive the optimizer, no consumer may push a filter
-    # beneath the exchange: the per-order `size >= k` guard is
-    # therefore a `when()` in the consumer's OWN projection (explode
-    # drops the null array — row-for-row the same as the filter), not
-    # a `where()`. On wide inputs the spread is a no-op and the layout
-    # degrades to exactly the old one (per-consumer tokenize, no added
-    # exchange).
-    ref_arr = spread_scan(ref_base.select(tok_ws(ref_tc).alias("_ws")))
+    doc_arr, ref_arr = _lm_token_arrays(
+        df, id_col, text_col, ref, ref_text_col, min_token_len
+    )
 
     def count_table(k: int) -> DataFrame:
         cols = [f"w{j + 1}" for j in range(k)]
@@ -1536,7 +1288,7 @@ def ngram_backoff_logprob(
         else:
             g = ref_arr.select(
                 F.explode(
-                    F.when(F.size("_ws") >= k, gram_structs(k))
+                    F.when(F.size("_ws") >= k, _gram_structs(k))
                 ).alias("g")
             ).select(*[F.col(f"g.{c}") for c in cols])
         out = g.groupBy(*cols).agg(F.count("*").alias(f"_c{k}"))
@@ -1581,9 +1333,8 @@ def ngram_backoff_logprob(
 
     doc_cols = [f"w{j + 1}" for j in range(order)]
     doc_ng = (
-        doc_df.select(F.col(id_col).alias("id"), tok_ws(text_col).alias("_ws"))
-        .where(F.size("_ws") >= order)
-        .select("id", F.explode(gram_structs(order)).alias("g"))
+        doc_arr.where(F.size("_ws") >= order)
+        .select("id", F.explode(_gram_structs(order)).alias("g"))
         .select("id", *[F.col(f"g.{c}") for c in doc_cols])
     )
     joined = doc_ng
@@ -1646,12 +1397,10 @@ def embed_bow(
     """
     if dim < 2:
         raise ValueError("dim must be >= 2")
-    src, _ = _spread_sources(df, id_col, text_col, None, text_col)
+    src = spread_scan(df.select(id_col, text_col), id_col)
     toks = src.select(
         F.col(id_col).alias("id"),
-        F.explode(
-            F.split(F.lower(F.trim(null_to_empty(text_col))), r"\s+")
-        ).alias("tok"),
+        F.explode(ws_tokens(text_col)).alias("tok"),
     ).where(F.length("tok") >= min_token_len)
     bucket = (
         F.conv(
